@@ -20,10 +20,13 @@ object Bench {
     // Warm-up: run EVERY query once at the smallest SF before timing.
     // Whole-stage codegen units are Janino-compiled then JIT'd per plan
     // (measured ~10 s one-time for the widest dedup plan vs ~3 s steady
-    // state); the warm-up pass compiles them against identical plan
-    // shapes so the timed pass measures execution, not compiler
-    // cold-start. At 100 TB the one-time codegen cost is noise; steady
-    // state is the meaningful per-query signal.
+    // state). The warm-up pass warms the JIT and fills the
+    // generated-class cache (keyed by generated source, LRU, sized by
+    // GraftSession.CodegenCacheEntries). A timed query skips Janino only
+    // while its classes are still cached: a class evicted since the
+    // warm-up, or one that inlines a per-run value, compiles again
+    // inside the timing. `codegen_compiles` in the output counts the
+    // timed pass's compiles, so a cache regression shows in the artifact.
     // warm against the sibling smallest SF when present; otherwise warm
     // with the timed dir itself (slower warm-up but never silently
     // skipped — a skipped warm-up would re-absorb per-plan codegen cost
@@ -73,6 +76,9 @@ object Bench {
       else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
     }
     var timedFailures = List.empty[String]
+    def compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
+    val compilesBefore = compiles
     val results = selected.flatMap { case (name, fn) =>
       val times = (1 to runs).flatMap { _ =>
         val t0 = System.nanoTime()
@@ -92,6 +98,7 @@ object Bench {
       if (times.size < runs) { timedFailures ::= name; None }
       else Some(name -> median(times))
     }
+    val timedCompiles = compiles - compilesBefore
     def fmt(v: Double) = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
@@ -205,7 +212,7 @@ object Bench {
     val suspects = scatterResults.filter(_._5 != "scatter")
       .map(t => "\"" + t._1 + "\"").mkString("[", ",", "]")
     val loadJson = load1m.map(fmt).getOrElse("null")
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","warm_dir":"$warmDir","warm_failures":$warmFailures,"runs":$runs,"timed_failures":$failed,"load_1m":$loadJson,"canaries":$canaries,"bands_assume_sf":"$bandsAssumeSf","window_clean":$windowClean,"scatter_flags":$scatterFlags,"suspects":$suspects}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","warm_dir":"$warmDir","warm_failures":$warmFailures,"runs":$runs,"timed_failures":$failed,"codegen_compiles":$timedCompiles,"load_1m":$loadJson,"canaries":$canaries,"bands_assume_sf":"$bandsAssumeSf","window_clean":$windowClean,"scatter_flags":$scatterFlags,"suspects":$suspects}""")
     // The driver's artifact retains only the TAIL of stdout (~2000
     // chars): round 9's full JSON lost its own total and half the
     // per-query numbers to the cut. Print a compact summary LAST so the
@@ -213,7 +220,7 @@ object Bench {
     // full line is truncated.
     val top10 = results.sortBy(-_._2).take(10)
       .map { case (k, v) => s"\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"runs":$runs,"timed_failures":$failed,"top10_slowest":$top10,"sf":"$sfDir","load_1m":$loadJson,"canaries":$canaries,"bands_assume_sf":"$bandsAssumeSf","window_clean":$windowClean,"scatter_flags":$scatterFlags,"suspects":$suspects}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"runs":$runs,"timed_failures":$failed,"codegen_compiles":$timedCompiles,"top10_slowest":$top10,"sf":"$sfDir","load_1m":$loadJson,"canaries":$canaries,"bands_assume_sf":"$bandsAssumeSf","window_clean":$windowClean,"scatter_flags":$scatterFlags,"suspects":$suspects}""")
     spark.stop()
   }
 }

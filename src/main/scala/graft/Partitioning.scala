@@ -82,6 +82,14 @@ object Partitioning {
     * terminal action on an operator's returned DataFrame in long-lived
     * sessions, where accumulated pins (up to 1 GiB each) otherwise live
     * until session shutdown.
+    *
+    * Only persisted plans are tracked. Relations materialized through
+    * [[checkpointKeyed]] or [[checkpointKeep]] are local checkpoints,
+    * not pins, and this call does not release them: among those are the
+    * per-round candidate pools of MMR re-ranking
+    * (`Similarity.diversifyMmr` and its variants), whose blocks stay
+    * until Spark's context cleaner drops them after their plans are
+    * garbage-collected, or until the session stops.
     */
   def unpersistPins(): Unit = {
     var df = pins.poll()
@@ -123,12 +131,17 @@ object Partitioning {
     */
   def checkpointKeyed(df: DataFrame, key: String,
                       numParts: Option[Int] = None): DataFrame = {
-    val n = numParts.getOrElse(
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
+    val n = numParts.getOrElse(shufflePartitions(df))
     GraftBridge.localCheckpointKeepPartitioning(
       df.repartition(n, org.apache.spark.sql.functions.col(key))
         .sortWithinPartitions(key))
   }
+
+  /** The session's `spark.sql.shuffle.partitions`, as Spark's own conf
+    * parser reads it.
+    */
+  private[graft] def shufflePartitions(df: DataFrame): Int =
+    df.sparkSession.sessionState.conf.defaultNumShufflePartitions
 
   /** [[GraftBridge.localCheckpointKeepPartitioning]] pass-through for
     * per-round state relations: same truncation as

@@ -769,7 +769,7 @@ object Dedup {
     // tiny graphs run single-task rounds and corpus-scale graphs keep
     // full parallelism.
     val keyParts = Some(math.min(
-      pairs.sparkSession.conf.get("spark.sql.shuffle.partitions").toLong,
+      graft.Partitioning.shufflePartitions(pairs).toLong,
       p.count() * 2L / 250000L + 1L).toInt)
     // the static edge relation is KEYED on dst — the per-round join key
     // — through the partitioning-preserving checkpoint (the Graph.scala

@@ -14,6 +14,7 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.codegenConfs)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
